@@ -828,6 +828,221 @@ def test_manifest_vacuum_removes_only_orphans(spark, tmp_path, monkeypatch):
     assert after == before
 
 
+def _write_entities(path, entities):
+    import json
+
+    with open(path, "w") as fh:
+        fh.write("[\n" + ",\n".join(json.dumps(e) for e in entities) + "\n]\n")
+    return str(path)
+
+
+def _ent(eid, label):
+    """A bare entity line: Q -> item, P -> property, L -> lexeme; each
+    with one claim so the Claims rows carry content."""
+    kind = {"Q": "item", "P": "property", "L": "lexeme"}[eid[0]]
+    return {
+        "type": kind,
+        "id": eid,
+        "labels": {"en": {"language": "en", "value": label}},
+        "descriptions": {"en": {"language": "en", "value": f"about {label}"}},
+        "claims": {
+            "P31": [fx._statement("P31", "string", f"claim of {label}")]
+        },
+    }
+
+
+def _table_rows(df):
+    import json
+
+    cols = sorted(c for c in df.columns if c != "_bucket")
+    return sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+        for r in df.select(*cols).collect()
+    )
+
+
+@pytest.mark.parametrize("filtered", [False, True], ids=["plain", "filtered"])
+def test_bucketed_merges_match_merge_loads(spark, tmp_path, filtered):
+    """Both bucketed merges (rename and manifest layout) give, on all 4
+    tables, exactly what merge_loads + a full rewrite gives. The update
+    repeats an id (first line wins), holds a Q/P numeric-id collision
+    (one Claims row), reaches buckets the base lacks, and (``filtered``)
+    passes through apply_ingest_filter, where the parent-derived probe
+    may list extra buckets whose live rows must come back unchanged."""
+    from wikidata_to_surrealdb_spark.operators.ingest import (
+        apply_ingest_filter,
+        merge_into_bucketed,
+        merge_into_bucketed_manifest,
+        merge_loads,
+        read_bucketed_manifest,
+        write_tables,
+        write_tables_bucketed,
+        write_tables_bucketed_manifest,
+    )
+
+    n = 8
+    # base ids are all even: buckets 1, 3, 5, 7 hold no base rows
+    base_ents = [_ent(f"Q{i}", f"base Q{i}") for i in range(2, 30, 2)]
+    base_ents += [_ent("P4", "base P4"), _ent("L6", "base L6")]
+    upd_ents = [
+        _ent("Q4", "new Q4"),
+        _ent("Q4", "later Q4"),  # same id again: the first line wins
+        _ent("Q9", "new Q9"),  # bucket 1: absent from the base
+        _ent("P9", "new P9"),  # collides with Q9 on Claims:9
+        _ent("L6", "new L6"),
+        _ent("Q13", "dropme"),  # bucket 5: absent from the base
+        _ent("Q22", "dropme"),  # bucket 6: live, in Entity reached only by it
+    ]
+    base_path = _write_entities(tmp_path / "base.json", base_ents)
+    upd_path = _write_entities(tmp_path / "upd.json", upd_ents)
+
+    def update():
+        t = load_dump(spark, upd_path)
+        if filtered:
+            t = apply_ingest_filter(
+                spark, t, "SELECT * FROM Entity WHERE label <> 'dropme'"
+            )
+        return t
+
+    full = str(tmp_path / "full")
+    write_tables(merge_loads(load_dump(spark, base_path), update()), full)
+    ren, man = str(tmp_path / "ren"), str(tmp_path / "man")
+    write_tables_bucketed(load_dump(spark, base_path), ren, n_buckets=n)
+    write_tables_bucketed_manifest(load_dump(spark, base_path), man, n_buckets=n)
+    touched_ren = merge_into_bucketed(spark, ren, update(), n_buckets=n)
+    touched_man = merge_into_bucketed_manifest(spark, man, update(), n_buckets=n)
+    assert touched_ren == touched_man
+    assert touched_man["Entity"] == [1, 4, 5, 6]
+    assert touched_man["Claims"] == [1, 4, 5, 6]
+
+    for table in ("Entity", "Property", "Lexeme", "Claims"):
+        want = _table_rows(spark.read.parquet(f"{full}/{table}.parquet"))
+        assert want, table
+        got_ren = _table_rows(spark.read.parquet(f"{ren}/{table}.parquet"))
+        got_man = _table_rows(read_bucketed_manifest(spark, f"{man}/{table}.parquet"))
+        assert got_ren == want, table
+        assert got_man == want, table
+    labels = {
+        r["label"] for r in read_bucketed_manifest(spark, f"{man}/Entity.parquet").collect()
+    }
+    assert "new Q4" in labels and "later Q4" not in labels
+    assert ("dropme" in labels) != filtered
+
+
+@pytest.mark.parametrize("layout", ["rename", "manifest"])
+def test_bucketed_merge_staged_parent_ownership(spark, tmp_path, layout):
+    """A staged parent the caller persisted is still cached after the
+    merge (the caller releases it); one the merge persisted itself is
+    released by the merge."""
+    from wikidata_to_surrealdb_spark.operators import ingest
+
+    write, merge = {
+        "rename": (ingest.write_tables_bucketed, ingest.merge_into_bucketed),
+        "manifest": (
+            ingest.write_tables_bucketed_manifest,
+            ingest.merge_into_bucketed_manifest,
+        ),
+    }[layout]
+    out = str(tmp_path / "t")
+    base = _mk_dump(tmp_path / "base.json", [(i, f"base{i}") for i in range(1, 9)])
+    write(load_dump(spark, base), out, n_buckets=4)
+
+    def cached(df):
+        level = df.storageLevel
+        return level.useMemory or level.useDisk
+
+    upd = load_dump(spark, _mk_dump(tmp_path / "u1.json", [(2, "u2")]))
+    parent = upd.staged_parent
+    parent.persist()
+    parent.count()
+    try:
+        merge(spark, out, upd, n_buckets=4)
+        assert parent.is_cached and cached(parent)
+    finally:
+        parent.unpersist()
+
+    upd = load_dump(spark, _mk_dump(tmp_path / "u2.json", [(3, "u3")]))
+    merge(spark, out, upd, n_buckets=4)
+    assert not upd.staged_parent.is_cached and not cached(upd.staged_parent)
+
+
+def test_manifest_reads_empty_table_by_recorded_schema(spark, tmp_path):
+    """A lexeme-free dump bootstraps an empty Lexeme table; after a merge
+    it still reads back as 0 rows with the table's columns plus
+    ``_bucket``. A manifest that records no schema keeps the error."""
+    import json
+
+    from wikidata_to_surrealdb_spark.operators.ingest import (
+        MANIFEST_NAME,
+        merge_into_bucketed_manifest,
+        read_bucketed_manifest,
+        write_tables_bucketed_manifest,
+    )
+
+    base = load_dump(spark, _mk_dump(tmp_path / "base.json", [(1, "a"), (2, "b")]))
+    out = str(tmp_path / "t")
+    write_tables_bucketed_manifest(base, out, n_buckets=4)
+    merge_into_bucketed_manifest(
+        spark, out, load_dump(spark, _mk_dump(tmp_path / "u.json", [(3, "c")])), n_buckets=4
+    )
+    lex_dir = f"{out}/Lexeme.parquet"
+    lex = read_bucketed_manifest(spark, lex_dir)
+    assert lex.count() == 0
+    assert lex.columns == base.lexeme.columns + ["_bucket"]
+    # a pruned read selecting no live bucket is empty too
+    ent_dir = f"{out}/Entity.parquet"
+    live = json.load(open(f"{ent_dir}/{MANIFEST_NAME}"))["buckets"]
+    absent = [b for b in range(4) if str(b) not in live]
+    if absent:
+        assert read_bucketed_manifest(spark, ent_dir, absent).count() == 0
+
+    m = json.load(open(f"{ent_dir}/{MANIFEST_NAME}"))
+    assert m["version"] == 2 and "schema" in m  # the merge kept the schema
+    with open(f"{lex_dir}/{MANIFEST_NAME}") as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(f"{lex_dir}/{MANIFEST_NAME}", "w") as fh:
+        json.dump(m, fh)
+    with pytest.raises(ValueError, match="no live buckets"):
+        read_bucketed_manifest(spark, lex_dir)
+
+
+# a dump line cut right after a key of the labels map: from_json's partial
+# result still carries the id
+_CUT_AFTER_MAP_KEY = (
+    '{"type":"item","id":"Q77","labels":{"en":{"language":"en",'
+    '"value":"cut short"},"de":'
+)
+
+
+def test_truncated_line_after_map_key_dropped(spark, tmp_path):
+    """Lenient mode drops a line cut after a labels-map key (no Entity
+    and no Claims row); valid lines around it survive."""
+    import json
+
+    path = tmp_path / "cut.json"
+    path.write_text(
+        "[\n"
+        + json.dumps(fx.plain_item(1, "whole")) + ",\n"
+        + _CUT_AFTER_MAP_KEY + ",\n"
+        + json.dumps(fx.plain_item(2, "also whole")) + "\n]\n"
+    )
+    t = load_dump(spark, str(path))
+    assert sorted(r["id"]["id"] for r in t.entity.collect()) == [1, 2]
+    assert sorted(r["id"]["id"] for r in t.claims.collect()) == [1, 2]
+
+
+def test_truncated_line_after_map_key_raises_in_strict(spark, tmp_path):
+    import json
+
+    path = tmp_path / "cut.json"
+    path.write_text(
+        "[\n" + json.dumps(fx.plain_item(1, "whole")) + ",\n" + _CUT_AFTER_MAP_KEY + "\n]\n"
+    )
+    with pytest.raises(ValueError, match="strict"):
+        load_dump(spark, str(path), strict=True)
+
+
 # ---------------------------------------------------------------------------
 # scd2_merge
 # ---------------------------------------------------------------------------

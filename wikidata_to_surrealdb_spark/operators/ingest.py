@@ -6,9 +6,9 @@ Reference semantics reproduced (file:line cites into /root/reference):
   real dump has bare entities; both accepted (tests/data/Entity.json vs
   README.md:11-20).
 - invalid lines: JSON that parses but is not a Wikidata entity is skipped
-  (utils.rs:138-141) -> PERMISSIVE parse + ``id IS NOT NULL`` filter; a
-  ``strict`` flag reproduces the reference's panic-on-malformed-JSON
-  (utils.rs:137) via FAILFAST-style count check.
+  (utils.rs:138-141) -> PERMISSIVE parse + corrupt-record flag +
+  ``id IS NOT NULL`` filter; a ``strict`` flag reproduces the reference's
+  panic-on-malformed-JSON (utils.rs:137) via FAILFAST-style count check.
 - id extraction: 'Q42' -> ('Entity', 42), P -> Property, L -> Lexeme
   (tables.rs:105-114).
 - single-language label/description selection, '' default
@@ -39,10 +39,12 @@ from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from wikidata_to_surrealdb_spark import schemas
 from wikidata_to_surrealdb_spark.sources.dump_reader import read_dump_lines
@@ -236,7 +238,8 @@ class WikidataTables:
 
     ``staged_parent`` is the single transformed DataFrame all four tables
     derive from; consumers that materialize more than one table should
-    persist it first (write_tables does) so the dump is parsed once.
+    persist it first (write_tables and the bucketed merges do) so the dump
+    is parsed once.
     """
 
     entity: DataFrame
@@ -263,31 +266,48 @@ def parse_entities(lines: DataFrame, strict: bool = False) -> DataFrame:
     """raw line DF -> typed entity rows (wrapper-unwrapped, invalid skipped).
 
     Returns columns: _line (file-order id), type, id, labels, descriptions,
-    claims. PERMISSIVE parse: a malformed line yields NULLs and is dropped,
-    matching the reference's skip-on-invalid (utils.rs:138-141); ``strict``
-    raises if any non-empty line failed to parse (the reference's
-    panic-on-bad-JSON, utils.rs:137).
+    claims. PERMISSIVE parse: a malformed line is dropped, matching the
+    reference's skip-on-invalid (utils.rs:138-141); ``strict`` raises if
+    any non-empty line failed to parse (the reference's panic-on-bad-JSON,
+    utils.rs:137). The bare-entity parse flags a line it cannot read
+    whole (cut short, or a field of another JSON type such as
+    ``"claims":[]``): the partial result of a cut line may carry an id.
     """
-    with_id = lines.withColumn("_line", F.monotonically_increasing_id())
     wrapper = F.from_json("line", schemas.RAW_WRAPPER)
-    bare = F.from_json("line", schemas.RAW_ENTITY)
+    bare = F.from_json(
+        "line",
+        T.StructType(schemas.RAW_ENTITY.fields + [T.StructField("_corrupt", T.StringType())]),
+        {"columnNameOfCorruptRecord": "_corrupt"},
+    )
     # fixtures wrap as {"entities": {id: entity}} (one per line); real dump
     # lines are bare entities. Take the wrapper's single map value if
     # present, else the bare parse.
     entity = F.coalesce(
-        F.element_at(F.map_values(wrapper["entities"]), 1),
-        bare,
+        F.element_at(F.map_values(F.col("w.entities")), 1),
+        F.col("b").dropFields("_corrupt"),
     ).alias("e")
-    parsed = with_id.select("_line", "line", entity).select(
-        "_line", "line", "e.*"
+    # the parses share a projection with the nondeterministic _line, so
+    # the optimizer cannot push the filters below beneath them, where each
+    # filter term would re-run a full parse of the line
+    parsed = (
+        lines.select(
+            "line",
+            F.monotonically_increasing_id().alias("_line"),
+            wrapper.alias("w"),
+            bare.alias("b"),
+        )
+        .select("_line", "line", F.col("b._corrupt").isNotNull().alias("_bad"), entity)
+        .select("_line", "line", "_bad", "e.*")
     )
     if strict:
-        bad = parsed.where(F.col("id").isNull() & (F.length("line") > 0)).limit(1)
+        bad = parsed.where(
+            (F.col("id").isNull() | F.col("_bad")) & (F.length("line") > 0)
+        ).limit(1)
         if bad.count() > 0:
             raise ValueError(f"strict mode: unparseable dump line: {bad.first()['line'][:200]}")
     return parsed.where(
-        F.col("id").isNotNull() & F.col("id").rlike("^[QPL][0-9]+$")
-    ).drop("line")
+        ~F.col("_bad") & F.col("id").isNotNull() & F.col("id").rlike("^[QPL][0-9]+$")
+    ).drop("line", "_bad")
 
 
 def transform_entities(parsed: DataFrame, lang: str = "en") -> DataFrame:
@@ -581,6 +601,61 @@ def _id_bucket(n_buckets: int) -> Column:
     return F.pmod(F.col("id.id"), F.lit(n_buckets)).cast("int")
 
 
+@contextmanager
+def _parsed_once(update: WikidataTables):
+    """Persist the update's staged parent for a merge, so all its jobs
+    read ONE parse. A parent the caller cached stays the caller's."""
+    from pyspark import StorageLevel
+
+    parent = update.staged_parent
+    owned = parent is not None and not parent.is_cached
+    if owned:
+        parent.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield
+    finally:
+        if owned:
+            parent.unpersist()
+
+
+def _touched_buckets(update: WikidataTables, n_buckets: int) -> dict[str, list[int]]:
+    """Every table's touched buckets from ONE job: the distinct ``(id.tb,
+    bucket)`` pairs of the parent's ``eid`` and ``claims_id`` (of the
+    tables' ids if there is no parent); a table's ``tb`` is its name. The
+    parent precedes any :func:`apply_ingest_filter`, so a filtered update
+    may list extra buckets, which are rewritten with their live rows."""
+    from functools import reduce
+
+    parent = update.staged_parent
+    if parent is not None:
+        ids = parent.select(F.explode(F.array("eid", "claims_id")).alias("id"))
+    else:
+        ids = reduce(DataFrame.union, [df.select("id") for df in update.as_dict().values()])
+    touched: dict[str, list[int]] = {name: [] for name in update.as_dict()}
+    for r in ids.select("id.tb", _id_bucket(n_buckets).alias("b")).distinct().collect():
+        touched[r["tb"]].append(r["b"])
+    return {name: sorted(bs) for name, bs in touched.items()}
+
+
+def _merge_by_bucket(base: DataFrame | None, new: DataFrame, n_buckets: int) -> DataFrame:
+    """Last-load-wins merge of one table's live touched rows (``base``,
+    carrying ``_bucket``) with the update in ONE exchange: the window on
+    ``(_bucket, id)`` reuses the ``_bucket`` hash partitioning, and the
+    result (one task per bucket) feeds a ``partitionBy`` write as is."""
+    from pyspark.sql.window import Window
+
+    rows = new.withColumn("_bucket", _id_bucket(n_buckets)).withColumn("_load", F.lit(1))
+    if base is not None:
+        rows = base.withColumn("_load", F.lit(0)).unionByName(rows)
+    w = Window.partitionBy("_bucket", "id").orderBy(F.col("_load").desc())
+    return (
+        rows.repartition("_bucket")
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn", "_load")
+    )
+
+
 def write_tables_bucketed(
     tables: WikidataTables, out_dir: str, n_buckets: int = 64
 ) -> None:
@@ -610,23 +685,23 @@ def merge_into_bucketed(
     """Bucket-local incremental merge: apply ``update`` (a fresh dump
     load) onto the bucketed layout written by
     :func:`write_tables_bucketed`, REWRITING ONLY the id-buckets that
-    contain updated entities. Returns the rewritten bucket ids per
-    table.
+    contain updated entities. Returns the touched bucket ids per table
+    (under an ingest filter, a superset: see :func:`_touched_buckets`).
 
     Why not :func:`merge_loads` + full rewrite: a daily refresh touches
     a small fraction of entities; recomputing and rewriting every
     untouched byte of a 100 TB table to apply it is the dominant — and
-    avoidable — cost. Here each table:
+    avoidable — cost. The steps:
 
-    1. computes the update's distinct bucket ids (a collect of at most
-       ``n_buckets`` ints);
-    2. reads the base table pruned to those buckets (PartitionFilters —
-       untouched buckets are never read, let alone rewritten);
-    3. last-load-wins merges just those rows with the update;
-    4. materializes the merged buckets into a SIBLING STAGING dir —
+    1. one parse of the update, one probe job for every table's touched
+       buckets (:func:`_parsed_once`, :func:`_touched_buckets`);
+    2. per table, the base pruned to those buckets (PartitionFilters —
+       untouched buckets are never read, let alone rewritten) is
+       last-load-wins merged with the update in one exchange;
+    3. the merged buckets are materialized into a SIBLING STAGING dir —
        the live table is untouched while the (arbitrarily long) Spark
        job runs, so a crash anywhere up to here loses nothing;
-    5. swaps each touched bucket dir in with two renames (live ->
+    4. each staged bucket dir is swapped in with two renames (live ->
        trash, staged -> live). The crash window shrinks from the whole
        write job to two filesystem metadata ops per bucket, and the
        trash copy makes even that window recoverable by hand. Untouched
@@ -642,32 +717,26 @@ def merge_into_bucketed(
     (single-file replace) every major object store offers.
     """
     out_dir = _require_local_path(out_dir)
-    touched_by_table: dict[str, list[int]] = {}
-    for name, new_df in update.as_dict().items():
-        path = f"{out_dir}/{name}.parquet"
-        new_b = new_df.withColumn("_bucket", _id_bucket(n_buckets))
-        touched = sorted(
-            r["_bucket"]
-            for r in new_b.select("_bucket").distinct().collect()
-        )
-        touched_by_table[name] = touched
-        if not touched:
-            continue
-        base = spark.read.parquet(path).where(
-            F.col("_bucket").isin(touched)
-        )
-        merged = _last_wins(base.drop("_bucket"), new_df).withColumn(
-            "_bucket", _id_bucket(n_buckets)
-        )
-        staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-        (
-            merged.repartition(F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(staging)
-        )
-        _swap_buckets(path, staging, touched)
-    return touched_by_table
+    with _parsed_once(update):
+        touched = _touched_buckets(update, n_buckets)
+        for name, new_df in update.as_dict().items():
+            if not touched[name]:
+                continue
+            path = f"{out_dir}/{name}.parquet"
+            base = spark.read.parquet(path).where(F.col("_bucket").isin(touched[name]))
+            staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
+            (
+                _merge_by_bucket(base, new_df, n_buckets)
+                .write.mode("overwrite")
+                .partitionBy("_bucket")
+                .parquet(staging)
+            )
+            staged = [
+                b for b in touched[name]
+                if os.path.exists(os.path.join(staging, f"_bucket={b}"))
+            ]
+            _swap_buckets(path, staging, staged)
+    return touched
 
 
 def _require_local_path(out_dir: str) -> str:
@@ -726,34 +795,46 @@ def _read_manifest(table_dir: str) -> dict:
 
     with open(os.path.join(table_dir, MANIFEST_NAME)) as fh:
         m = json.load(fh)
-    return {"version": m["version"], "buckets": {int(k): v for k, v in m["buckets"].items()}}
+    return {
+        "version": m["version"],
+        "buckets": {int(k): v for k, v in m["buckets"].items()},
+        "schema": m.get("schema"),
+    }
 
 
-def _commit_manifest(table_dir: str, version: int, buckets: dict[int, str]) -> None:
+def _commit_manifest(
+    table_dir: str, version: int, buckets: dict[int, str], schema: dict | None = None
+) -> None:
     """THE commit for the manifest layout: write the new manifest to a
     temp name, then replace the live one with a SINGLE atomic
     file-replace. That primitive (atomic single-object put) is the one
     every major object store offers, unlike directory rename — which is
     why readers resolve bucket dirs through this pointer instead of
-    relying on dirs being swapped in place."""
+    relying on dirs being swapped in place.
+
+    ``schema`` (the table's files' schema, as ``StructType.jsonValue()``)
+    is recorded at bootstrap; a commit without one keeps the live
+    manifest's."""
     import json
 
+    live = os.path.join(table_dir, MANIFEST_NAME)
+    if schema is None and os.path.exists(live):
+        schema = _read_manifest(table_dir)["schema"]
+    body: dict = {"version": version, "buckets": {str(k): v for k, v in buckets.items()}}
+    if schema is not None:
+        body["schema"] = schema
     tmp = os.path.join(table_dir, f".{MANIFEST_NAME}.tmp-{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as fh:
-        json.dump(
-            {"version": version, "buckets": {str(k): v for k, v in buckets.items()}},
-            fh,
-        )
-    os.replace(tmp, os.path.join(table_dir, MANIFEST_NAME))
+        json.dump(body, fh)
+    os.replace(tmp, live)
 
 
-def _place_bucket_generations(
-    df: DataFrame, table_dir: str, n_buckets: int
-) -> dict[int, str]:
+def _place_bucket_generations(df: DataFrame, table_dir: str) -> dict[int, str]:
     """Materialize ``df``'s rows as one generation-named directory per
     present bucket (``bucket=<b>-<gen>``), WITHOUT touching the live
     manifest. ``_bucket`` rides inside the files as a data column, so a
-    manifest reader gets it back without partition-dir discovery.
+    manifest reader gets it back without partition-dir discovery. The
+    caller partitions ``df`` by ``_bucket`` (one file per bucket).
 
     The staged-write-then-rename here is driver-local data PLACEMENT,
     not the commit — a crash leaves unreferenced directories the
@@ -764,7 +845,6 @@ def _place_bucket_generations(
     staging = f"{table_dir}.genstage-{gen}"
     (
         df.withColumn("_pb", F.col("_bucket"))
-        .repartition(F.col("_bucket"))
         .write.mode("overwrite")
         .partitionBy("_pb")
         .parquet(staging)
@@ -788,7 +868,8 @@ def write_tables_bucketed_manifest(
 ) -> None:
     """Manifest-pointer twin of :func:`write_tables_bucketed`: each
     table directory holds generation-named bucket dirs plus a
-    ``_MANIFEST.json`` naming the live generation per bucket. Readers
+    ``_MANIFEST.json`` naming the live generation per bucket and the
+    table's schema (so an empty table reads back). Readers
     (:func:`read_bucketed_manifest`) resolve through the manifest, so
     commits are a single atomic file replace — the protocol that stays
     atomic on object stores where directory rename is not."""
@@ -801,10 +882,9 @@ def write_tables_bucketed_manifest(
     def _bootstrap(name: str, df: DataFrame) -> None:
         table_dir = f"{out_dir}/{name}.parquet"
         os.makedirs(table_dir, exist_ok=True)
-        placed = _place_bucket_generations(
-            df.withColumn("_bucket", _id_bucket(n_buckets)), table_dir, n_buckets
-        )
-        _commit_manifest(table_dir, 1, placed)
+        df_b = df.withColumn("_bucket", _id_bucket(n_buckets))
+        placed = _place_bucket_generations(df_b.repartition("_bucket"), table_dir)
+        _commit_manifest(table_dir, 1, placed, df_b.schema.jsonValue())
 
     # the 4 table writes are independent jobs on independent table dirs
     # (separate manifests); running them from a thread pool lets each
@@ -822,16 +902,28 @@ def read_bucketed_manifest(
 ) -> DataFrame:
     """Read a manifest-layout table, optionally pruned to ``buckets``.
     Pruning is driver-side directory selection — untouched buckets are
-    never listed, opened, or read (stronger than a partition filter)."""
+    never listed, opened, or read (stronger than a partition filter).
+    The schema the manifest records (at bootstrap) is handed to the
+    reader, which then runs no schema-inference job. When no live bucket
+    is selected (an empty table, or a pruned read of buckets it lacks)
+    the result is an empty frame of that schema; a manifest without one
+    raises ValueError."""
     m = _read_manifest(table_dir)
     dirs = [
         os.path.join(table_dir, d)
         for b, d in sorted(m["buckets"].items())
         if buckets is None or b in buckets
     ]
-    if not dirs:
+    schema = m["schema"] and T.StructType.fromJson(m["schema"])
+    if dirs:
+        return (spark.read.schema(schema) if schema else spark.read).parquet(*dirs)
+    if not schema:
         raise ValueError(f"no live buckets selected from {table_dir}")
-    return spark.read.parquet(*dirs)
+    # an empty LocalRelation: the optimizer folds a join or DELETE over it
+    # away instead of running the other side
+    return spark.range(0).select(
+        [F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+    ).limit(0)
 
 
 def merge_into_bucketed_manifest(
@@ -843,16 +935,22 @@ def merge_into_bucketed_manifest(
     """Bucket-local incremental merge with a MANIFEST-POINTER commit —
     the object-store-safe sibling of :func:`merge_into_bucketed`
     (which swaps directories in place and therefore needs atomic
-    rename). Per table:
+    rename). Returns the touched bucket ids per table.
 
-    1. read the live manifest; compute the update's touched buckets;
-    2. read ONLY those buckets' live generation dirs, last-load-wins
-       merge with the update;
-    3. place the merged rows as NEW generation dirs (never referenced
-       by the live manifest — a crash here is invisible to readers);
-    4. COMMIT by atomically replacing ``_MANIFEST.json`` with one
+    1. one parse: the update's staged parent is persisted for the whole
+       merge, unless the caller cached it (then the caller releases it);
+    2. one probe job lists all four tables' touched buckets. It reads
+       the parent, so under an ingest filter a list may hold buckets no
+       filtered row reaches; those are rewritten with their live rows;
+    3. per table, ONE exchange: the touched buckets' live generations
+       and the update's rows, hash-partitioned on the bucket, are
+       last-load-wins merged;
+    4. the merged rows are placed as NEW generation dirs (never
+       referenced by the live manifest — a crash here is invisible to
+       readers);
+    5. COMMIT by atomically replacing ``_MANIFEST.json`` with one
        pointing touched buckets at the new generations;
-    5. best-effort delete the superseded generation dirs (failure
+    6. best-effort delete the superseded generation dirs (failure
        leaves orphans that no reader resolves; retried merges and
        vacuum jobs may clean them any time).
 
@@ -861,62 +959,33 @@ def merge_into_bucketed_manifest(
     import shutil
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import StorageLevel
-
     out_dir = _require_local_path(out_dir)
 
-    def _merge_one(name: str, new_df: DataFrame) -> list[int]:
+    def _merge_one(name: str, new_df: DataFrame, touched: list[int]) -> None:
         table_dir = f"{out_dir}/{name}.parquet"
         manifest = _read_manifest(table_dir)
-        # persist the bucketed update: the touched-bucket probe below and
-        # the placement write both consume it, and without the cache each
-        # job replays the update's whole derivation (for the streaming
-        # upsert path, a full re-parse of the batch per job)
-        new_b = new_df.withColumn("_bucket", _id_bucket(n_buckets)).persist(
-            StorageLevel.MEMORY_AND_DISK
+        live = [b for b in touched if b in manifest["buckets"]]
+        base = read_bucketed_manifest(spark, table_dir, live) if live else None
+        placed = _place_bucket_generations(
+            _merge_by_bucket(base, new_df, n_buckets), table_dir
         )
-        try:
-            touched = sorted(
-                r["_bucket"]
-                for r in new_b.select("_bucket").distinct().collect()
-            )
-            if not touched:
-                return touched
-            live_touched = [b for b in touched if b in manifest["buckets"]]
-            if live_touched:
-                base = read_bucketed_manifest(
-                    spark, table_dir, live_touched
-                ).drop("_bucket")
-                merged = _last_wins(base, new_b.drop("_bucket"))
-            else:
-                merged = new_b.drop("_bucket")
-            placed = _place_bucket_generations(
-                merged.withColumn("_bucket", _id_bucket(n_buckets)),
-                table_dir,
-                n_buckets,
-            )
-            old_dirs = [
-                manifest["buckets"][b]
-                for b in touched
-                if b in manifest["buckets"]
-            ]
-            new_map = dict(manifest["buckets"])
-            new_map.update(placed)
-            _commit_manifest(table_dir, manifest["version"] + 1, new_map)
-            for d in old_dirs:  # superseded generations: best-effort cleanup
-                shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
-            return touched
-        finally:
-            new_b.unpersist()
+        new_map = dict(manifest["buckets"])
+        new_map.update(placed)
+        _commit_manifest(table_dir, manifest["version"] + 1, new_map)
+        for b in live:  # superseded generations: best-effort cleanup
+            shutil.rmtree(os.path.join(table_dir, manifest["buckets"][b]), ignore_errors=True)
 
-    # per-table merges touch disjoint table dirs and commit disjoint
-    # manifests — independent jobs, so overlap them (§ concurrency note
-    # on write_tables): the tiny-batch steady state is job-count bound,
-    # not byte bound
-    items = list(update.as_dict().items())
-    with ThreadPoolExecutor(max_workers=len(items)) as pool:
-        futures = {n: pool.submit(_merge_one, n, d) for n, d in items}
-        return {n: f.result() for n, f in futures.items()}
+    with _parsed_once(update):
+        touched = _touched_buckets(update, n_buckets)
+        # per-table merges touch disjoint table dirs and commit disjoint
+        # manifests — independent jobs, so overlap them (§ concurrency
+        # note on write_tables): the tiny-batch steady state is job-count
+        # bound, not byte bound
+        items = [(n, d) for n, d in update.as_dict().items() if touched[n]]
+        with ThreadPoolExecutor(max_workers=max(1, len(items))) as pool:
+            for f in [pool.submit(_merge_one, n, d, touched[n]) for n, d in items]:
+                f.result()
+    return touched
 
 
 def vacuum_bucketed_manifest(
