@@ -253,6 +253,37 @@ def test_strict_mode_raises(spark, tmp_path):
     assert parse_entities(lines, strict=False).count() == 1
 
 
+def test_dump_lines_strip_trailing_comma_once(spark, tmp_path):
+    """read_dump_lines keeps the reference's line rules (trim, strip one
+    trailing comma, drop wrapper lines and blanks) while the optimized
+    plans of it and of parse_entities evaluate the strip once per line."""
+    import json
+
+    from wikidata_to_surrealdb_spark.operators.ingest import parse_entities
+    from wikidata_to_surrealdb_spark.sources.dump_reader import read_dump_lines
+
+    ent = json.dumps({"type": "item", "id": "Q1", "labels": {}, "claims": {}})
+    edge = ["[", "]", "[,", "],", ",", ",,", "", "   ", " [ ", ent + ",", ent, f"  {ent},  "]
+    path = tmp_path / "edge.json"
+    path.write_text("\n".join(edge) + "\n")
+
+    lines = read_dump_lines(spark, str(path))
+    # reference rules: strip first, then filter on the stripped line
+    stripped = F.regexp_replace(F.trim(F.col("value")), r",$", "").alias("line")
+    want = (
+        spark.read.text(str(path))
+        .select(stripped)
+        .where(~F.col("line").isin("[", "]") & (F.length("line") > 0))
+    )
+    got = [r["line"] for r in lines.collect()]
+    assert got == [r["line"] for r in want.collect()]
+    assert got == [",", ent, ent, ent]
+
+    for df in (lines, parse_entities(lines)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("regexp_replace") == 1, plan
+
+
 def test_claims_long_roundtrip(spark, entity_tables):
     """Long format explodes every claim exactly once, preserves the flatten
     order, and answers the array-filter idiom as a plain filtered scan."""
@@ -388,224 +419,25 @@ def test_duplicate_entity_id_keeps_first_line(spark, tmp_path):
     assert rows[0]["label"] == "first label"
 
 
-def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
-    """merge_into_bucketed applies a fresh load by rewriting ONLY the
-    id-buckets containing updated entities; every file in an untouched
-    bucket stays byte-identical (the 100 TB daily-refresh contract)."""
-    import hashlib
-    import json
-    import os
-
-    from wikidata_to_surrealdb_spark.operators.ingest import (
-        merge_into_bucketed,
-        write_tables_bucketed,
-    )
-
-    def dump(path, ents):
-        lines = [
-            json.dumps(
-                {
-                    "id": f"Q{i}",
-                    "type": "item",
-                    "labels": {
-                        "en": {"language": "en", "value": label}
-                    },
-                    "descriptions": {},
-                    "aliases": {},
-                    "claims": {},
-                    "sitelinks": {},
-                }
-            )
-            for i, label in ents
-        ]
-        with open(path, "w") as fh:
-            fh.write("[\n" + ",\n".join(lines) + "\n]\n")
-        return str(path)
-
-    base = load_dump(
-        spark,
-        dump(tmp_path / "base.json", [(i, f"base{i}") for i in range(1, 9)]),
-        "json",
-        lang="en",
-    )
-    out = str(tmp_path / "tables")
-    write_tables_bucketed(base, out, n_buckets=4)
-
-    def snapshot():
-        snap = {}
-        for dirpath, _d, files in os.walk(out):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(dirpath, f)
-                    snap[p] = hashlib.md5(open(p, "rb").read()).hexdigest()
-        return snap
-
-    before = snapshot()
-
-    # update touches Q2 (bucket 2) and adds Q10 (bucket 2): bucket 2 only
-    upd = load_dump(
-        spark,
-        dump(tmp_path / "upd.json", [(2, "updated2"), (10, "new10")]),
-        "json",
-        lang="en",
-    )
-    touched = merge_into_bucketed(spark, out, upd, n_buckets=4)
-    assert touched["Entity"] == [2]
-
-    after = snapshot()
-    untouched_before = {p: h for p, h in before.items() if "_bucket=2" not in p}
-    untouched_after = {p: h for p, h in after.items() if "_bucket=2" not in p}
-    assert untouched_before == untouched_after  # byte-identical, same files
-
-    merged = spark.read.parquet(f"{out}/Entity.parquet")
-    got = {r["id"]["id"]: r["label"] for r in merged.collect()}
-    assert got[2] == "updated2" and got[10] == "new10"
-    assert got[1] == "base1" and got[8] == "base8"
-    assert len(got) == 9
-
-
-def test_bucketed_merge_crash_between_write_and_swap_leaves_table_intact(
-    spark, tmp_path, monkeypatch
-):
-    """Failure injection: if the job dies after the staging write but
-    before the bucket swap, the live table must be byte-identical and
-    readable, and a retry of the same merge must succeed."""
-    import hashlib
-    import json
-    import os
-
-    from wikidata_to_surrealdb_spark.operators import ingest as ingest_mod
-    from wikidata_to_surrealdb_spark.operators.ingest import (
-        merge_into_bucketed,
-        write_tables_bucketed,
-    )
-
-    def dump(path, ents):
-        lines = [
-            json.dumps(
-                {
-                    "id": f"Q{i}",
-                    "type": "item",
-                    "labels": {"en": {"language": "en", "value": label}},
-                    "descriptions": {},
-                    "aliases": {},
-                    "claims": {},
-                    "sitelinks": {},
-                }
-            )
-            for i, label in ents
-        ]
-        with open(path, "w") as fh:
-            fh.write("[\n" + ",\n".join(lines) + "\n]\n")
-        return str(path)
-
-    base = load_dump(
-        spark,
-        dump(tmp_path / "base.json", [(i, f"base{i}") for i in range(1, 9)]),
-        "json",
-        lang="en",
-    )
-    out = str(tmp_path / "tables")
-    write_tables_bucketed(base, out, n_buckets=4)
-
-    def live_snapshot():
-        snap = {}
-        for dirpath, _d, files in os.walk(out):
-            if ".staging-" in dirpath or ".trash-" in dirpath:
-                continue
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(dirpath, f)
-                    snap[p] = hashlib.md5(open(p, "rb").read()).hexdigest()
-        return snap
-
-    before = live_snapshot()
-    upd = load_dump(
-        spark,
-        dump(tmp_path / "upd.json", [(2, "updated2"), (10, "new10")]),
-        "json",
-        lang="en",
-    )
-
-    real_swap = ingest_mod._swap_buckets
-
-    def boom(path, staging, touched):
-        raise RuntimeError("injected crash between staging write and swap")
-
-    monkeypatch.setattr(ingest_mod, "_swap_buckets", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        merge_into_bucketed(spark, out, upd, n_buckets=4)
-
-    # live table: byte-identical, fully readable, pre-merge contents
-    assert live_snapshot() == before
-    got = {
-        r["id"]["id"]: r["label"]
-        for r in spark.read.parquet(f"{out}/Entity.parquet").collect()
-    }
-    assert got == {i: f"base{i}" for i in range(1, 9)}
-
-    # retry with the real swap succeeds despite the leftover staging dir
-    monkeypatch.setattr(ingest_mod, "_swap_buckets", real_swap)
-    touched = merge_into_bucketed(spark, out, upd, n_buckets=4)
-    assert touched["Entity"] == [2]
-    got = {
-        r["id"]["id"]: r["label"]
-        for r in spark.read.parquet(f"{out}/Entity.parquet").collect()
-    }
-    assert got[2] == "updated2" and got[10] == "new10" and len(got) == 9
-
-
-def test_swap_rename_failure_preserves_recovery_evidence(tmp_path, monkeypatch):
-    """ADVICE regression: if a live->trash rename fails mid-swap (EACCES,
-    I/O error), the source dir stays in place — so an 'all live dirs
-    exist' guard would wrongly clean up. The cleanup must be gated on the
-    swap loop actually completing; trash + staging are the recovery
-    evidence and must survive."""
-    import os
-
-    from wikidata_to_surrealdb_spark.operators.ingest import _swap_buckets
-
-    table = tmp_path / "t.parquet"
-    staging = tmp_path / "t.parquet.staging-test"
-    for b in (0, 1):
-        (table / f"_bucket={b}").mkdir(parents=True)
-        (table / f"_bucket={b}" / "part-0.parquet").write_bytes(b"live%d" % b)
-        (staging / f"_bucket={b}").mkdir(parents=True)
-        (staging / f"_bucket={b}" / "part-0.parquet").write_bytes(b"new%d" % b)
-
-    real_rename = os.rename
-
-    def failing_rename(src, dst):
-        if "_bucket=1" in str(src) and ".trash-" in str(dst):
-            raise PermissionError(f"injected EACCES renaming {src}")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing_rename)
-    with pytest.raises(PermissionError, match="injected"):
-        _swap_buckets(str(table), str(staging), [0, 1])
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    # bucket 0 swapped, bucket 1 did not — and BOTH recovery dirs survive
-    assert (table / "_bucket=0" / "part-0.parquet").read_bytes() == b"new0"
-    assert (table / "_bucket=1" / "part-0.parquet").read_bytes() == b"live1"
-    trash_dirs = [p for p in tmp_path.iterdir() if ".trash-" in p.name]
-    assert len(trash_dirs) == 1, "trash dir (recovery evidence) was destroyed"
-    assert (trash_dirs[0] / "_bucket=0" / "part-0.parquet").read_bytes() == b"live0"
-    assert staging.exists(), "staging dir (recovery evidence) was destroyed"
-
-
 def test_bucketed_merge_rejects_object_store_uri():
-    """os.rename cannot swap hdfs:// / s3a:// paths Spark itself would
-    accept; the merge must fail fast with a clear error, not mid-swap."""
+    """The manifest layout places and commits through driver-local file
+    operations; every entry point must fail fast on hdfs:// / s3a://
+    paths Spark itself would accept, and strip file:// URIs."""
     from wikidata_to_surrealdb_spark.operators.ingest import (
         _require_local_path,
-        merge_into_bucketed,
+        merge_into_bucketed_manifest,
+        vacuum_bucketed_manifest,
+        write_tables_bucketed_manifest,
     )
 
     for bad in ("s3a://bucket/tables", "hdfs://nn:8020/tables"):
-        with pytest.raises(ValueError, match="scheme"):
-            merge_into_bucketed(None, bad, None)
-    # file: URIs are fine — stripped to a plain local path
+        for call in (
+            lambda: write_tables_bucketed_manifest(None, bad),
+            lambda: merge_into_bucketed_manifest(None, bad, None),
+            lambda: vacuum_bucketed_manifest(bad),
+        ):
+            with pytest.raises(ValueError, match="scheme"):
+                call()
     assert _require_local_path("file:///tmp/x") == "/tmp/x"
     assert _require_local_path("/plain/path") == "/plain/path"
 
@@ -863,20 +695,18 @@ def _table_rows(df):
 
 @pytest.mark.parametrize("filtered", [False, True], ids=["plain", "filtered"])
 def test_bucketed_merges_match_merge_loads(spark, tmp_path, filtered):
-    """Both bucketed merges (rename and manifest layout) give, on all 4
-    tables, exactly what merge_loads + a full rewrite gives. The update
+    """The bucketed-manifest merge gives, on all 4 tables, exactly what
+    merge_loads + a full rewrite gives. The update
     repeats an id (first line wins), holds a Q/P numeric-id collision
     (one Claims row), reaches buckets the base lacks, and (``filtered``)
     passes through apply_ingest_filter, where the parent-derived probe
     may list extra buckets whose live rows must come back unchanged."""
     from wikidata_to_surrealdb_spark.operators.ingest import (
         apply_ingest_filter,
-        merge_into_bucketed,
         merge_into_bucketed_manifest,
         merge_loads,
         read_bucketed_manifest,
         write_tables,
-        write_tables_bucketed,
         write_tables_bucketed_manifest,
     )
 
@@ -906,22 +736,17 @@ def test_bucketed_merges_match_merge_loads(spark, tmp_path, filtered):
 
     full = str(tmp_path / "full")
     write_tables(merge_loads(load_dump(spark, base_path), update()), full)
-    ren, man = str(tmp_path / "ren"), str(tmp_path / "man")
-    write_tables_bucketed(load_dump(spark, base_path), ren, n_buckets=n)
+    man = str(tmp_path / "man")
     write_tables_bucketed_manifest(load_dump(spark, base_path), man, n_buckets=n)
-    touched_ren = merge_into_bucketed(spark, ren, update(), n_buckets=n)
-    touched_man = merge_into_bucketed_manifest(spark, man, update(), n_buckets=n)
-    assert touched_ren == touched_man
-    assert touched_man["Entity"] == [1, 4, 5, 6]
-    assert touched_man["Claims"] == [1, 4, 5, 6]
+    touched = merge_into_bucketed_manifest(spark, man, update(), n_buckets=n)
+    assert touched["Entity"] == [1, 4, 5, 6]
+    assert touched["Claims"] == [1, 4, 5, 6]
 
     for table in ("Entity", "Property", "Lexeme", "Claims"):
         want = _table_rows(spark.read.parquet(f"{full}/{table}.parquet"))
         assert want, table
-        got_ren = _table_rows(spark.read.parquet(f"{ren}/{table}.parquet"))
-        got_man = _table_rows(read_bucketed_manifest(spark, f"{man}/{table}.parquet"))
-        assert got_ren == want, table
-        assert got_man == want, table
+        got = _table_rows(read_bucketed_manifest(spark, f"{man}/{table}.parquet"))
+        assert got == want, table
     labels = {
         r["label"] for r in read_bucketed_manifest(spark, f"{man}/Entity.parquet").collect()
     }
@@ -929,23 +754,18 @@ def test_bucketed_merges_match_merge_loads(spark, tmp_path, filtered):
     assert ("dropme" in labels) != filtered
 
 
-@pytest.mark.parametrize("layout", ["rename", "manifest"])
-def test_bucketed_merge_staged_parent_ownership(spark, tmp_path, layout):
+def test_bucketed_merge_staged_parent_ownership(spark, tmp_path):
     """A staged parent the caller persisted is still cached after the
     merge (the caller releases it); one the merge persisted itself is
     released by the merge."""
-    from wikidata_to_surrealdb_spark.operators import ingest
+    from wikidata_to_surrealdb_spark.operators.ingest import (
+        merge_into_bucketed_manifest as merge,
+        write_tables_bucketed_manifest,
+    )
 
-    write, merge = {
-        "rename": (ingest.write_tables_bucketed, ingest.merge_into_bucketed),
-        "manifest": (
-            ingest.write_tables_bucketed_manifest,
-            ingest.merge_into_bucketed_manifest,
-        ),
-    }[layout]
     out = str(tmp_path / "t")
     base = _mk_dump(tmp_path / "base.json", [(i, f"base{i}") for i in range(1, 9)])
-    write(load_dump(spark, base), out, n_buckets=4)
+    write_tables_bucketed_manifest(load_dump(spark, base), out, n_buckets=4)
 
     def cached(df):
         level = df.storageLevel

@@ -484,8 +484,8 @@ def incremental_minhash_dedup(
       the caller's.
     - ``'replace'``: the RECRAWL contract — a delta id that already
       exists in the corpus supersedes its old version (last-writer-
-      wins, mirroring ``merge_into_bucketed``). The corpus side (raw
-      corpus and/or passed-in index+shingle artifacts) is anti-joined
+      wins, mirroring ``merge_into_bucketed_manifest``). The corpus side
+      (raw corpus and/or passed-in index+shingle artifacts) is anti-joined
       on the delta's id set before the probe, so a re-crawled doc is
       never compared against its own stale text and pairs reflect the
       new text only. The anti-join is declarative: AQE broadcasts the

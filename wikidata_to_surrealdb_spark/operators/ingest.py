@@ -238,8 +238,8 @@ class WikidataTables:
 
     ``staged_parent`` is the single transformed DataFrame all four tables
     derive from; consumers that materialize more than one table should
-    persist it first (write_tables and the bucketed merges do) so the dump
-    is parsed once.
+    persist it first (write_tables and merge_into_bucketed_manifest do) so
+    the dump is parsed once.
     """
 
     entity: DataFrame
@@ -595,6 +595,9 @@ def _last_wins(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
+# --- bucket-local refresh: manifest-pointer layout -------------------------
+
+
 def _id_bucket(n_buckets: int) -> Column:
     """Deterministic id-hash bucket from the numeric entity id — a pure
     map (retry/re-ingest stable, engine-portable)."""
@@ -656,93 +659,11 @@ def _merge_by_bucket(base: DataFrame | None, new: DataFrame, n_buckets: int) -> 
     )
 
 
-def write_tables_bucketed(
-    tables: WikidataTables, out_dir: str, n_buckets: int = 64
-) -> None:
-    """Persist the 4 tables directory-partitioned by an id-hash bucket
-    column — the layout :func:`merge_into_bucketed` needs to refresh a
-    100 TB corpus without rewriting it. Each bucket directory is an
-    independently replaceable unit (dynamic partition overwrite), and
-    scans/merges keyed on id prune to the buckets they touch."""
-    if n_buckets < 1:
-        raise ValueError("n_buckets must be >= 1")
-    from wikidata_to_surrealdb_spark.sources.layout import write_partitioned
-
-    for name, df in tables.as_dict().items():
-        write_partitioned(
-            df.withColumn("_bucket", _id_bucket(n_buckets)),
-            f"{out_dir}/{name}.parquet",
-            "_bucket",
-        )
-
-
-def merge_into_bucketed(
-    spark: SparkSession,
-    out_dir: str,
-    update: WikidataTables,
-    n_buckets: int = 64,
-) -> dict[str, list[int]]:
-    """Bucket-local incremental merge: apply ``update`` (a fresh dump
-    load) onto the bucketed layout written by
-    :func:`write_tables_bucketed`, REWRITING ONLY the id-buckets that
-    contain updated entities. Returns the touched bucket ids per table
-    (under an ingest filter, a superset: see :func:`_touched_buckets`).
-
-    Why not :func:`merge_loads` + full rewrite: a daily refresh touches
-    a small fraction of entities; recomputing and rewriting every
-    untouched byte of a 100 TB table to apply it is the dominant — and
-    avoidable — cost. The steps:
-
-    1. one parse of the update, one probe job for every table's touched
-       buckets (:func:`_parsed_once`, :func:`_touched_buckets`);
-    2. per table, the base pruned to those buckets (PartitionFilters —
-       untouched buckets are never read, let alone rewritten) is
-       last-load-wins merged with the update in one exchange;
-    3. the merged buckets are materialized into a SIBLING STAGING dir —
-       the live table is untouched while the (arbitrarily long) Spark
-       job runs, so a crash anywhere up to here loses nothing;
-    4. each staged bucket dir is swapped in with two renames (live ->
-       trash, staged -> live). The crash window shrinks from the whole
-       write job to two filesystem metadata ops per bucket, and the
-       trash copy makes even that window recoverable by hand. Untouched
-       bucket files stay byte-identical (asserted by test_ingest).
-
-    The swap runs through the ``os`` module, so ``out_dir`` must be a
-    driver-local filesystem path (validated below) — ``hdfs://`` /
-    ``s3a://`` URIs that Spark's own reader/writer would accept cannot
-    be renamed by ``os.rename``. An object-store deployment should
-    either target a table format (Iceberg/Delta) whose manifest commit
-    provides the same atomicity, or use the manifest-pointer commit in
-    :func:`merge_into_bucketed_manifest`, whose only atomic primitive
-    (single-file replace) every major object store offers.
-    """
-    out_dir = _require_local_path(out_dir)
-    with _parsed_once(update):
-        touched = _touched_buckets(update, n_buckets)
-        for name, new_df in update.as_dict().items():
-            if not touched[name]:
-                continue
-            path = f"{out_dir}/{name}.parquet"
-            base = spark.read.parquet(path).where(F.col("_bucket").isin(touched[name]))
-            staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-            (
-                _merge_by_bucket(base, new_df, n_buckets)
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(staging)
-            )
-            staged = [
-                b for b in touched[name]
-                if os.path.exists(os.path.join(staging, f"_bucket={b}"))
-            ]
-            _swap_buckets(path, staging, staged)
-    return touched
-
-
 def _require_local_path(out_dir: str) -> str:
-    """The bucket-swap protocols commit via driver-local ``os`` renames;
-    reject URI-scheme paths (hdfs://, s3a://, ...) up front instead of
-    failing mid-swap. ``file:`` URIs are accepted and stripped."""
+    """The manifest layout (and the FTS index build) place and commit
+    files through driver-local ``os`` calls; reject URI-scheme paths
+    (hdfs://, s3a://, ...) up front instead of failing mid-placement.
+    ``file:`` URIs are accepted and stripped."""
     import re
 
     m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://", out_dir)
@@ -751,41 +672,11 @@ def _require_local_path(out_dir: str) -> str:
     if m.group(1) == "file":
         return out_dir[len(m.group(0)) :]  # file:///tmp/x -> /tmp/x
     raise ValueError(
-        f"bucketed merge commits via driver-local renames; {out_dir!r} has "
-        f"scheme {m.group(1)!r} — use a local path, or a table format / "
-        "manifest commit for object stores"
+        f"bucketed tables are placed and committed through driver-local "
+        f"file operations; {out_dir!r} has scheme {m.group(1)!r} — use a "
+        "local path"
     )
 
-
-def _swap_buckets(path: str, staging: str, touched: list[int]) -> None:
-    """Swap staged ``_bucket=<b>`` dirs into the live table, keeping the
-    replaced dirs in a trash sibling until every swap has succeeded.
-    Factored out so tests can inject a failure between the staging write
-    and the swap (the table must stay readable)."""
-    import shutil
-
-    trash = f"{path}.trash-{uuid.uuid4().hex[:8]}"
-    os.makedirs(trash)
-    swapped = False
-    try:
-        for b in touched:
-            live_b = os.path.join(path, f"_bucket={b}")
-            staged_b = os.path.join(staging, f"_bucket={b}")
-            if os.path.exists(live_b):
-                os.rename(live_b, os.path.join(trash, f"_bucket={b}"))
-            os.rename(staged_b, live_b)
-        swapped = True
-    finally:
-        # only clean up after the swap loop itself completed; inferring
-        # success from "live dirs exist" would mistake a failed
-        # live->trash rename (source left in place) for success and
-        # destroy the recovery evidence
-        if swapped:
-            shutil.rmtree(trash, ignore_errors=True)
-            shutil.rmtree(staging, ignore_errors=True)
-
-
-# --- manifest-pointer bucketed layout (object-store-safe commit) ------------
 
 MANIFEST_NAME = "_MANIFEST.json"
 
@@ -866,13 +757,15 @@ def _place_bucket_generations(df: DataFrame, table_dir: str) -> dict[int, str]:
 def write_tables_bucketed_manifest(
     tables: WikidataTables, out_dir: str, n_buckets: int = 64
 ) -> None:
-    """Manifest-pointer twin of :func:`write_tables_bucketed`: each
-    table directory holds generation-named bucket dirs plus a
-    ``_MANIFEST.json`` naming the live generation per bucket and the
-    table's schema (so an empty table reads back). Readers
-    (:func:`read_bucketed_manifest`) resolve through the manifest, so
-    commits are a single atomic file replace — the protocol that stays
-    atomic on object stores where directory rename is not."""
+    """Persist the 4 tables in the layout
+    :func:`merge_into_bucketed_manifest` refreshes bucket by bucket. Rows
+    carry an id-hash bucket (``_bucket``); each table directory holds
+    one generation-named dir per present bucket plus a ``_MANIFEST.json``
+    naming the live generation per bucket and the table's schema (so an
+    empty table reads back). Readers (:func:`read_bucketed_manifest`)
+    resolve through the manifest, so commits are a single atomic file
+    replace — the protocol that stays atomic on object stores where
+    directory rename is not."""
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     from concurrent.futures import ThreadPoolExecutor
@@ -932,10 +825,14 @@ def merge_into_bucketed_manifest(
     update: WikidataTables,
     n_buckets: int = 64,
 ) -> dict[str, list[int]]:
-    """Bucket-local incremental merge with a MANIFEST-POINTER commit —
-    the object-store-safe sibling of :func:`merge_into_bucketed`
-    (which swaps directories in place and therefore needs atomic
-    rename). Returns the touched bucket ids per table.
+    """Bucket-local incremental merge: apply ``update`` (a fresh dump
+    load) onto the layout written by :func:`write_tables_bucketed_manifest`,
+    rewriting ONLY the id-buckets that hold updated entities, and commit
+    each table by replacing its manifest. Returns the touched bucket ids
+    per table (under an ingest filter, a superset: see
+    :func:`_touched_buckets`). Unlike :func:`merge_loads` + a full
+    rewrite, untouched buckets are never read, let alone rewritten: a
+    daily refresh touches a small share of a 100 TB table.
 
     1. one parse: the update's staged parent is persisted for the whole
        merge, unless the caller cached it (then the caller releases it);

@@ -1533,7 +1533,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch re-crawls doc_id%10=1 with CHANGED text (modeled as the "
     "successor doc's text) plus the usual doc_id%5=0 new docs; "
     "on_conflict='replace' anti-joins the corpus side on the delta's id "
-    "set (last-writer-wins, mirroring merge_into_bucketed), so a "
+    "set (last-writer-wins, mirroring merge_into_bucketed_manifest), so a "
     "re-crawled doc never pairs with its own stale text and every pair "
     "reflects the new text only — each recrawled id surfaces its "
     "successor as a jaccard-1.0 corpus pair, which only exists under "
@@ -6186,66 +6186,6 @@ def sketch_kmv_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "wd_bucketed_merge",
-    """
-    SELECT id, label, episodes FROM (VALUES
-      ('Entity:100', 'Graph Wars', CAST(NULL AS DOUBLE)),
-      ('Entity:101', 'Graph Wars, season 1 remastered', CAST(13.0 AS DOUBLE)),
-      ('Entity:102', 'Graph Wars, season 2', CAST(8.0 AS DOUBLE)),
-      ('Entity:103', 'Standalone documentary', CAST(NULL AS DOUBLE)),
-      ('Entity:104', 'Graph Wars, season 3', CAST(6.0 AS DOUBLE))
-    ) AS v(id, label, episodes)
-    """,
-    "bucket-local incremental merge (ingest.merge_into_bucketed): the v1 "
-    "load is written partitioned by id-hash bucket, the v2 revision is "
-    "applied by rewriting ONLY the buckets containing updated entities "
-    "(partition-pruned read + dynamic partition overwrite — untouched "
-    "bucket files stay byte-identical, asserted in tests); the merged "
-    "state read back from parquet must equal merge_loads' in-memory "
-    "result, which is what the hand-derived oracle pins",
-)
-def wd_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from wikidata_to_surrealdb_spark.functions import (
-        first_claim_value,
-        link_join,
-    )
-    from wikidata_to_surrealdb_spark.operators import ingest as _ingest
-
-    data_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data"
-    )
-    v1 = _ingest.load_dump(
-        spark, os.path.join(data_dir, "media_dump.json"), "json", lang="en"
-    )
-    v2 = _ingest.load_dump(
-        spark, os.path.join(data_dir, "media_dump_v2.json"), "json", lang="en"
-    )
-    # fixed per-session dir (reused with overwrite): a fresh mkdtemp per
-    # invocation would leak a full table set on every driver/bench run
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"wd_bucketed_merge_{spark.sparkContext.applicationId}",
-    )
-    _ingest.write_tables_bucketed(v1, out, n_buckets=8)
-    _ingest.merge_into_bucketed(spark, out, v2, n_buckets=8)
-    entity = spark.read.parquet(f"{out}/Entity.parquet").drop("_bucket")
-    claims = spark.read.parquet(f"{out}/Claims.parquet").drop("_bucket")
-    joined = link_join(entity, claims, broadcast_right=True)
-    return joined.where(entity["id.tb"] == "Entity").select(
-        F.concat_ws(
-            ":", entity["id.tb"], entity["id.id"].cast("string")
-        ).alias("id"),
-        entity["label"].alias("label"),
-        first_claim_value(claims["claims"], 1113, "quantity.amount").alias(
-            "episodes"
-        ),
-    )
-
-
-@_q(
     "wd_manifest_merge",
     """
     SELECT id, label, episodes FROM (VALUES
@@ -6256,12 +6196,14 @@ def wd_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
       ('Entity:104', 'Graph Wars, season 3', CAST(6.0 AS DOUBLE))
     ) AS v(id, label, episodes)
     """,
-    "bucket-local incremental merge through the MANIFEST-POINTER layout "
-    "(ingest.merge_into_bucketed_manifest): generation-named bucket dirs "
-    "resolved through _MANIFEST.json, commit = one atomic file replace "
-    "(the primitive object stores provide, unlike directory rename); "
-    "same v1+v2 fixture and hand-derived oracle as wd_bucketed_merge — "
-    "the two commit protocols must converge to the identical table",
+    "bucket-local incremental merge (ingest.merge_into_bucketed_manifest): "
+    "the v1 load is written as generation-named id-hash bucket dirs "
+    "resolved through _MANIFEST.json, the v2 revision rewrites ONLY the "
+    "buckets containing updated entities and commits with one atomic "
+    "file replace (the primitive object stores provide, unlike directory "
+    "rename); the merged state read back through the manifest must equal "
+    "merge_loads' in-memory result, which is what the hand-derived "
+    "oracle pins",
 )
 def wd_manifest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os

@@ -39,11 +39,12 @@ def read_dump_lines(
         raise ValueError(
             f"unknown WIKIDATA_FILE_FORMAT {file_format!r}; expected one of {FILE_FORMATS}"
         )
-    lines = spark.read.text(path)
-    # trim -> strip one trailing comma -> drop array wrapper lines / blanks
-    line = F.regexp_replace(F.trim(F.col("value")), r",$", "")
+    # drop array wrapper lines / blanks (with or without their trailing
+    # comma) on the trimmed value, then strip one trailing comma: filtering
+    # on the stripped alias would inline the regexp into every predicate
+    trimmed = F.trim(F.col("value"))
     return (
-        lines.select(line.alias("line"))
-        .where(~F.col("line").isin("[", "]"))
-        .where(F.length("line") > 0)
+        spark.read.text(path)
+        .where(~trimmed.isin("", ",", "[", "[,", "]", "],"))
+        .select(F.regexp_replace(trimmed, r",$", "").alias("line"))
     )

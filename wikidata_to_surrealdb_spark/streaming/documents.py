@@ -252,8 +252,8 @@ def _remove_store_ids(
 ) -> None:
     """Surgically drop every band/shingle row of the given doc ids
     from the store — the recrawl half of upsert (last-writer-wins,
-    mirroring ``merge_into_bucketed``). Only the subdirs that actually
-    CONTAIN the ids are rewritten (discovered via ``input_file_name``
+    mirroring ``merge_into_bucketed_manifest``). Only the subdirs that
+    actually CONTAIN the ids are rewritten (discovered via ``input_file_name``
     + a semi join), each through the same verified-tmp + intent-marker
     swap as compaction, so per-batch cost is bounded by the affected
     dirs and a crash at any point is recoverable by
