@@ -754,36 +754,68 @@ def test_bucketed_merges_match_merge_loads(spark, tmp_path, filtered):
     assert ("dropme" in labels) != filtered
 
 
-def test_bucketed_merge_staged_parent_ownership(spark, tmp_path):
-    """A staged parent the caller persisted is still cached after the
-    merge (the caller releases it); one the merge persisted itself is
-    released by the merge."""
-    from wikidata_to_surrealdb_spark.operators.ingest import (
-        merge_into_bucketed_manifest as merge,
-        write_tables_bucketed_manifest,
-    )
+@pytest.mark.parametrize(
+    "writer",
+    ["write_tables", "write_tables_bucketed_manifest", "merge_into_bucketed_manifest"],
+)
+def test_bucketed_merge_staged_parent_ownership(spark, tmp_path, monkeypatch, writer):
+    """Every ingest writer runs its per-table jobs on a cached staged
+    parent. A parent the writer persisted itself is released by the
+    writer; one the caller persisted is still cached afterwards (the
+    caller releases it)."""
+    from wikidata_to_surrealdb_spark.operators import ingest
 
-    out = str(tmp_path / "t")
-    base = _mk_dump(tmp_path / "base.json", [(i, f"base{i}") for i in range(1, 9)])
-    write_tables_bucketed_manifest(load_dump(spark, base), out, n_buckets=4)
+    base = str(tmp_path / "base")
+    if writer == "merge_into_bucketed_manifest":
+        base_dump = _mk_dump(tmp_path / "base.json", [(i, f"base{i}") for i in range(1, 9)])
+        ingest.write_tables_bucketed_manifest(load_dump(spark, base_dump), base, n_buckets=4)
+    write = {
+        "write_tables": lambda t, out: ingest.write_tables(t, out),
+        "write_tables_bucketed_manifest": lambda t, out: (
+            ingest.write_tables_bucketed_manifest(t, out, n_buckets=4)
+        ),
+        "merge_into_bucketed_manifest": lambda t, out: (
+            ingest.merge_into_bucketed_manifest(spark, base, t, n_buckets=4)
+        ),
+    }[writer]
 
     def cached(df):
         level = df.storageLevel
-        return level.useMemory or level.useDisk
+        return df.is_cached and (level.useMemory or level.useDisk)
 
-    upd = load_dump(spark, _mk_dump(tmp_path / "u1.json", [(2, "u2")]))
-    parent = upd.staged_parent
-    parent.persist()
-    parent.count()
-    try:
-        merge(spark, out, upd, n_buckets=4)
-        assert parent.is_cached and cached(parent)
-    finally:
-        parent.unpersist()
+    seen: list[bool] = []
+    per_table = ingest._per_table
 
-    upd = load_dump(spark, _mk_dump(tmp_path / "u2.json", [(3, "u3")]))
-    merge(spark, out, upd, n_buckets=4)
-    assert not upd.staged_parent.is_cached and not cached(upd.staged_parent)
+    def recording(step, items):
+        def recorded(*args):
+            seen.append(cached(parent))
+            step(*args)
+
+        per_table(recorded, items)
+
+    monkeypatch.setattr(ingest, "_per_table", recording)
+    for i, caller_cached in enumerate([True, False]):
+        upd = load_dump(spark, _mk_dump(tmp_path / f"u{i}.json", [(2 + i, f"u{i}")]))
+        parent = upd.staged_parent
+        if caller_cached:
+            parent.persist()
+            parent.count()
+        seen.clear()
+        try:
+            write(upd, str(tmp_path / f"out{i}"))
+            assert seen and all(seen), seen
+            assert cached(parent) == caller_cached
+        finally:
+            parent.unpersist()
+
+
+def test_claims_element_type_is_claim_schema(entity_tables):
+    """The ClaimData branches the ingest builds (one typed NULL per
+    schema field) give the Claims table exactly ``schemas.CLAIM``."""
+    from wikidata_to_surrealdb_spark import schemas
+
+    element = entity_tables.claims.schema["claims"].dataType.elementType
+    assert element.simpleString() == schemas.CLAIM.simpleString()
 
 
 def test_manifest_reads_empty_table_by_recorded_schema(spark, tmp_path):

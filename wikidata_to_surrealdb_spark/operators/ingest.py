@@ -37,9 +37,11 @@ into ~thousands of tasks with no driver involvement.
 
 from __future__ import annotations
 
+import concurrent.futures
 import os
 import uuid
-from contextlib import contextmanager
+from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -54,31 +56,11 @@ from wikidata_to_surrealdb_spark.sources.dump_reader import read_dump_lines
 
 _CLAIM_DDL = schemas.CLAIM.simpleString()  # struct<id:...,value:...>
 
+# every ClaimData branch but the tag, as a typed NULL, in schema order
 _VARIANT_NULLS = {
-    "thing": "CAST(NULL AS struct<tb:string,id:bigint>)",
-    "string": "CAST(NULL AS string)",
-    "external_id": "CAST(NULL AS string)",
-    "url": "CAST(NULL AS string)",
-    "monolingualtext": "CAST(NULL AS struct<text:string,lang:string>)",
-    "multilingualtext": "CAST(NULL AS array<struct<text:string,lang:string>>)",
-    "quantity": (
-        "CAST(NULL AS struct<amount:double,lower_bound:double,"
-        "upper_bound:double,unit:struct<tb:string,id:bigint>>)"
-    ),
-    "date_time": "CAST(NULL AS struct<value:string,precision:int>)",
-    "globe_coordinate": (
-        "CAST(NULL AS struct<lat:double,lon:double,precision:double,"
-        "globe:struct<tb:string,id:bigint>>)"
-    ),
-    "commons_media": "CAST(NULL AS string)",
-    "math_expr": "CAST(NULL AS string)",
-    "geo_shape": "CAST(NULL AS string)",
-    "music_notation": "CAST(NULL AS string)",
-    "tabular_data": "CAST(NULL AS string)",
-    "form": "CAST(NULL AS string)",
-    "sense": "CAST(NULL AS string)",
-    "no_value": "CAST(NULL AS boolean)",
-    "unknown_value": "CAST(NULL AS boolean)",
+    f.name: f"CAST(NULL AS {f.dataType.simpleString()})"
+    for f in schemas.CLAIM_VALUE.fields
+    if f.name != "kind"
 }
 
 
@@ -237,9 +219,8 @@ class WikidataTables:
     """The 4-table entity graph, as DataFrames. ``views()`` registers them.
 
     ``staged_parent`` is the single transformed DataFrame all four tables
-    derive from; consumers that materialize more than one table should
-    persist it first (write_tables and merge_into_bucketed_manifest do) so
-    the dump is parsed once.
+    derive from; every writer here stages it through :func:`_parsed_once`
+    so the dump is parsed once.
     """
 
     entity: DataFrame
@@ -457,6 +438,46 @@ def claims_long(claims: DataFrame) -> DataFrame:
     )
 
 
+@contextmanager
+def _parsed_once(tables: WikidataTables):
+    """Stage ``tables``' shared parent for the jobs run inside the block,
+    so all of them read ONE parse of the dump instead of each re-scanning
+    and re-parsing the raw JSON (the dominant CPU cost at 100 TB).
+
+    The parent is persisted MEMORY_AND_DISK (it spills rather than OOMs at
+    scale, and spilled rows are far cheaper to re-read than re-parsing
+    JSON), materialized with one ``count()`` so concurrent table jobs read
+    cached data rather than race on computing the cache, and released on
+    exit. A parent the caller cached stays the caller's."""
+    from pyspark import StorageLevel
+
+    parent = tables.staged_parent
+    if parent is None or parent.is_cached:
+        yield
+        return
+    parent.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        parent.count()
+        yield
+    finally:
+        parent.unpersist()
+
+
+def _per_table(step: Callable[..., None], items: list[tuple]) -> None:
+    """Run ``step(*args)`` for every ``args`` in ``items`` (one per table),
+    each on its own thread.
+
+    The table jobs are independent (own directory, own manifest) and read
+    the same staged parent, so running them serially leaves the cluster
+    idle during each job's task tail; submitted together, the scheduler
+    interleaves their tasks instead. Every job finishes before the first
+    error is re-raised."""
+    with concurrent.futures.ThreadPoolExecutor(max_workers=max(1, len(items))) as pool:
+        jobs = [pool.submit(step, *args) for args in items]
+    for job in jobs:
+        job.result()
+
+
 def write_tables(
     tables: WikidataTables,
     out_dir: str,
@@ -468,20 +489,11 @@ def write_tables(
     utils.rs:152-160, minus the HTTP hop).
 
     All four outputs derive from ONE parsed/transformed pass over the
-    dump; without staging, each write would re-scan and re-parse the raw
-    JSON — 4x the dominant CPU cost at 100 TB. ``stage=True`` persists the
-    shared transformed parent (MEMORY_AND_DISK: spills rather than OOMs at
-    scale, and spilled Tungsten rows are far cheaper to re-read than
-    re-parsing JSON) for the duration of the writes. At cluster scale,
-    callers should additionally repartition by id hash for downstream join
-    locality (see sources/bucketing.py).
-
-    The four writes are submitted CONCURRENTLY (one thread per table):
-    they read the same staged parent and are independent jobs, so running
-    them serially leaves the cluster idle during each job's tail — the
-    scheduler interleaves their tasks instead. The parent is materialized
-    first so the concurrent jobs race on cached data, not on computing
-    the cache.
+    dump: ``stage=True`` stages that parent for the writes
+    (:func:`_parsed_once`), and the four writes run concurrently
+    (:func:`_per_table`). At cluster scale, callers should additionally
+    repartition by id hash for downstream join locality (see
+    sources/bucketing.py).
 
     ``observe=True`` attaches a ``DataFrame.observe`` (CollectMetrics)
     per table so data-quality telemetry — row count, empty labels/
@@ -490,10 +502,6 @@ def write_tables(
     observation is free. Returns ``{table: {metric: value}}`` when
     observing, else None.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import StorageLevel
-
     obs_map: dict[str, object] = {}
 
     def _observed(name: str, df: DataFrame) -> DataFrame:
@@ -519,28 +527,14 @@ def write_tables(
         obs_map[name] = ob
         return df.observe(ob, *metrics)
 
-    parent = tables.staged_parent if stage else None
-    if parent is not None:
-        parent.persist(StorageLevel.MEMORY_AND_DISK)
-        parent.count()  # materialize once, before the writes race on it
-    try:
-        items = list(tables.as_dict().items())
-        if observe:
-            items = [(name, _observed(name, df)) for name, df in items]
-        with ThreadPoolExecutor(max_workers=len(items)) as pool:
-            futures = [
-                pool.submit(
-                    lambda n=name, d=df: d.write.mode(mode).parquet(
-                        f"{out_dir}/{n}.parquet"
-                    )
-                )
-                for name, df in items
-            ]
-            for f in futures:
-                f.result()
-    finally:
-        if parent is not None:
-            parent.unpersist()
+    def _write(name: str, df: DataFrame) -> None:
+        df.write.mode(mode).parquet(f"{out_dir}/{name}.parquet")
+
+    items = list(tables.as_dict().items())
+    if observe:
+        items = [(name, _observed(name, df)) for name, df in items]
+    with _parsed_once(tables) if stage else nullcontext():
+        _per_table(_write, items)
     if not observe:
         return None
     # the writes completed, so every observation is resolved; empty
@@ -602,23 +596,6 @@ def _id_bucket(n_buckets: int) -> Column:
     """Deterministic id-hash bucket from the numeric entity id — a pure
     map (retry/re-ingest stable, engine-portable)."""
     return F.pmod(F.col("id.id"), F.lit(n_buckets)).cast("int")
-
-
-@contextmanager
-def _parsed_once(update: WikidataTables):
-    """Persist the update's staged parent for a merge, so all its jobs
-    read ONE parse. A parent the caller cached stays the caller's."""
-    from pyspark import StorageLevel
-
-    parent = update.staged_parent
-    owned = parent is not None and not parent.is_cached
-    if owned:
-        parent.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        yield
-    finally:
-        if owned:
-            parent.unpersist()
 
 
 def _touched_buckets(update: WikidataTables, n_buckets: int) -> dict[str, list[int]]:
@@ -697,11 +674,9 @@ def _commit_manifest(
     table_dir: str, version: int, buckets: dict[int, str], schema: dict | None = None
 ) -> None:
     """THE commit for the manifest layout: write the new manifest to a
-    temp name, then replace the live one with a SINGLE atomic
-    file-replace. That primitive (atomic single-object put) is the one
-    every major object store offers, unlike directory rename — which is
-    why readers resolve bucket dirs through this pointer instead of
-    relying on dirs being swapped in place.
+    temp name in the table dir, then ``os.replace`` the live one with
+    it — a single atomic rename on a local filesystem. Readers resolve
+    bucket dirs through this pointer, so a commit swaps no data dir.
 
     ``schema`` (the table's files' schema, as ``StructType.jsonValue()``)
     is recorded at bootstrap; a commit without one keeps the live
@@ -727,11 +702,11 @@ def _place_bucket_generations(df: DataFrame, table_dir: str) -> dict[int, str]:
     manifest reader gets it back without partition-dir discovery. The
     caller partitions ``df`` by ``_bucket`` (one file per bucket).
 
-    The staged-write-then-rename here is driver-local data PLACEMENT,
-    not the commit — a crash leaves unreferenced directories the
-    reader never sees (cleaned up opportunistically). On a real object
-    store the writer targets the generation keys directly; correctness
-    never depends on these renames being atomic."""
+    The staged write then driver-local ``os.rename`` per bucket dir is
+    data PLACEMENT, not the commit — a crash leaves unreferenced
+    directories the reader never sees (cleaned up by
+    :func:`vacuum_bucketed_manifest`); correctness never depends on these
+    renames being atomic."""
     gen = uuid.uuid4().hex[:8]
     staging = f"{table_dir}.genstage-{gen}"
     (
@@ -763,13 +738,13 @@ def write_tables_bucketed_manifest(
     one generation-named dir per present bucket plus a ``_MANIFEST.json``
     naming the live generation per bucket and the table's schema (so an
     empty table reads back). Readers (:func:`read_bucketed_manifest`)
-    resolve through the manifest, so commits are a single atomic file
-    replace — the protocol that stays atomic on object stores where
-    directory rename is not."""
+    resolve through the manifest, so a commit is one local file replace
+    (:func:`_commit_manifest`). ``out_dir`` must be a local path.
+
+    The four tables are bootstrapped from one staged parse
+    (:func:`_parsed_once`), concurrently (:func:`_per_table`)."""
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
-    from concurrent.futures import ThreadPoolExecutor
-
     out_dir = _require_local_path(out_dir)
 
     def _bootstrap(name: str, df: DataFrame) -> None:
@@ -779,15 +754,8 @@ def write_tables_bucketed_manifest(
         placed = _place_bucket_generations(df_b.repartition("_bucket"), table_dir)
         _commit_manifest(table_dir, 1, placed, df_b.schema.jsonValue())
 
-    # the 4 table writes are independent jobs on independent table dirs
-    # (separate manifests); running them from a thread pool lets each
-    # job's task tail back-fill the others' idle cores instead of the
-    # cluster draining 4 times — same rule as write_tables' concurrent
-    # writes
-    items = list(tables.as_dict().items())
-    with ThreadPoolExecutor(max_workers=len(items)) as pool:
-        for f in [pool.submit(_bootstrap, n, d) for n, d in items]:
-            f.result()
+    with _parsed_once(tables):
+        _per_table(_bootstrap, list(tables.as_dict().items()))
 
 
 def read_bucketed_manifest(
@@ -834,8 +802,8 @@ def merge_into_bucketed_manifest(
     rewrite, untouched buckets are never read, let alone rewritten: a
     daily refresh touches a small share of a 100 TB table.
 
-    1. one parse: the update's staged parent is persisted for the whole
-       merge, unless the caller cached it (then the caller releases it);
+    1. one parse: the update's parent is staged for the whole merge
+       (:func:`_parsed_once`);
     2. one probe job lists all four tables' touched buckets. It reads
        the parent, so under an ingest filter a list may hold buckets no
        filtered row reaches; those are rewritten with their live rows;
@@ -851,10 +819,11 @@ def merge_into_bucketed_manifest(
        leaves orphans that no reader resolves; retried merges and
        vacuum jobs may clean them any time).
 
-    The crash window around the commit is a single file replace; at no
-    point can a reader observe a half-merged table."""
+    Steps 3-6 run per table, concurrently (:func:`_per_table`): the
+    tiny-batch steady state is job-count bound, not byte bound. The crash
+    window around each table's commit is a single local file replace; at
+    no point can a reader observe a half-merged table."""
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
 
     out_dir = _require_local_path(out_dir)
 
@@ -874,14 +843,10 @@ def merge_into_bucketed_manifest(
 
     with _parsed_once(update):
         touched = _touched_buckets(update, n_buckets)
-        # per-table merges touch disjoint table dirs and commit disjoint
-        # manifests — independent jobs, so overlap them (§ concurrency
-        # note on write_tables): the tiny-batch steady state is job-count
-        # bound, not byte bound
-        items = [(n, d) for n, d in update.as_dict().items() if touched[n]]
-        with ThreadPoolExecutor(max_workers=max(1, len(items))) as pool:
-            for f in [pool.submit(_merge_one, n, d, touched[n]) for n, d in items]:
-                f.result()
+        _per_table(
+            _merge_one,
+            [(n, d, touched[n]) for n, d in update.as_dict().items() if touched[n]],
+        )
     return touched
 
 

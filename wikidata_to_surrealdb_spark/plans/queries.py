@@ -6200,8 +6200,8 @@ def sketch_kmv_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the v1 load is written as generation-named id-hash bucket dirs "
     "resolved through _MANIFEST.json, the v2 revision rewrites ONLY the "
     "buckets containing updated entities and commits with one atomic "
-    "file replace (the primitive object stores provide, unlike directory "
-    "rename); the merged state read back through the manifest must equal "
+    "local file replace of the manifest; the merged state read back "
+    "through the manifest must equal "
     "merge_loads' in-memory result, which is what the hand-derived "
     "oracle pins",
 )

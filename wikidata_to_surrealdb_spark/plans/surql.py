@@ -50,32 +50,17 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wikidata_to_surrealdb_spark import schemas
+
 
 class SurqlError(ValueError):
     """Parse or compile error, with position context."""
 
 
 # crate variant name (README.md:110-118 ClaimValueData) -> normalized
-# union branch (schemas.py CLAIM_VALUE)
+# union branch (schemas.py CLAIM_VALUE): the branch name without '_'
 _VARIANTS = {
-    "thing": "thing",
-    "string": "string",
-    "externalid": "external_id",
-    "url": "url",
-    "monolingualtext": "monolingualtext",
-    "multilingualtext": "multilingualtext",
-    "quantity": "quantity",
-    "datetime": "date_time",
-    "globecoordinate": "globe_coordinate",
-    "commonsmedia": "commons_media",
-    "mathexpr": "math_expr",
-    "geoshape": "geo_shape",
-    "musicnotation": "music_notation",
-    "tabulardata": "tabular_data",
-    "form": "form",
-    "sense": "sense",
-    "novalue": "no_value",
-    "unknownvalue": "unknown_value",
+    f.name.replace("_", ""): f.name for f in schemas.CLAIM_VALUE.fields if f.name != "kind"
 }
 
 _TOKEN_RE = re.compile(

@@ -39,12 +39,18 @@ def read_dump_lines(
         raise ValueError(
             f"unknown WIKIDATA_FILE_FORMAT {file_format!r}; expected one of {FILE_FORMATS}"
         )
-    # drop array wrapper lines / blanks (with or without their trailing
-    # comma) on the trimmed value, then strip one trailing comma: filtering
-    # on the stripped alias would inline the regexp into every predicate
+    return normalize_dump_lines(spark.read.text(path))
+
+
+def normalize_dump_lines(text: DataFrame) -> DataFrame:
+    """Text frame (a ``value`` column of raw dump lines, batch or
+    micro-batch) -> one-column DataFrame ``line`` of raw entity JSON.
+
+    Drops array wrapper lines / blanks (with or without their trailing
+    comma) on the trimmed value, then strips one trailing comma: filtering
+    on the stripped alias would inline the regexp into every predicate.
+    """
     trimmed = F.trim(F.col("value"))
-    return (
-        spark.read.text(path)
-        .where(~trimmed.isin("", ",", "[", "[,", "]", "],"))
-        .select(F.regexp_replace(trimmed, r",$", "").alias("line"))
+    return text.where(~trimmed.isin("", ",", "[", "[,", "]", "],")).select(
+        F.regexp_replace(trimmed, r",$", "").alias("line")
     )

@@ -81,44 +81,21 @@ def stream_upsert_manifest(
         transform_entities,
         write_tables_bucketed_manifest,
     )
+    from wikidata_to_surrealdb_spark.sources.dump_reader import normalize_dump_lines
     from wikidata_to_surrealdb_spark.streaming.events import (
         _drain_progress,
         _state_partitions,
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark import StorageLevel
-
-        line = F.regexp_replace(F.trim(F.col("value")), r",$", "")
-        lines = (
-            batch_df.select(line.alias("line"))
-            .where(~F.col("line").isin("[", "]"))
-            .where(F.length("line") > 0)
-        )
+        # the batch writers stage the batch's parsed parent themselves;
+        # its cache is bounded by the micro-batch, not the table
+        lines = normalize_dump_lines(batch_df)
         tables = build_tables(transform_entities(parse_entities(lines), lang))
-        # stage the shared parsed parent for the duration of the batch:
-        # all 4 tables (and, in the merge path, both the touched-bucket
-        # probe and the placement write) derive from ONE parse of the
-        # batch — without the cache each job re-parses the raw JSON.
-        # Cache size is bounded by the micro-batch, not the table, so
-        # per-trigger memory stays proportional to trigger volume.
-        parent = tables.staged_parent
-        parent.persist(StorageLevel.MEMORY_AND_DISK)
-        parent.count()  # materialize once, before the table jobs race on it
-        try:
-            bootstrapped = os.path.exists(
-                os.path.join(out_dir, "Entity.parquet", MANIFEST_NAME)
-            )
-            if bootstrapped:
-                merge_into_bucketed_manifest(
-                    spark, out_dir, tables, n_buckets=n_buckets
-                )
-            else:
-                write_tables_bucketed_manifest(
-                    tables, out_dir, n_buckets=n_buckets
-                )
-        finally:
-            parent.unpersist()
+        if os.path.exists(os.path.join(out_dir, "Entity.parquet", MANIFEST_NAME)):
+            merge_into_bucketed_manifest(spark, out_dir, tables, n_buckets=n_buckets)
+        else:
+            write_tables_bucketed_manifest(tables, out_dir, n_buckets=n_buckets)
 
     checkpoint = os.path.join(out_dir, "_stream_checkpoint")
     with _state_partitions(spark, 8):
